@@ -12,7 +12,8 @@ lifecycle/progress API (SURVEY.md section 2). This package provides:
   ``__spark_entry__.py``, the pytest parity harness, and ``bench.py``.
 - ``core``: the generic MapReduceClient API (map/emit2/reduce/emit3 and
   JobHandle/getJobState semantics, reference MapReduceFramework.h:15-24),
-  made idiomatic: mapInPandas + groupBy().applyInPandas + statusTracker.
+  made idiomatic: mapInPandas + hash shuffle + sorted key-run reduce
+  (one mapInPandas pass for a one-partition input) + statusTracker.
 - ``operators``: dedup / similarity / text / multimodal extension operators
   designed for 100 TB scale.
 - ``streaming``: Structured Streaming surface over the events table.

@@ -1,7 +1,9 @@
 """The generic MapReduce client API run through the correctness gate.
 
-These queries execute real MapReduceClient jobs (core/client.py) via the
-mapInPandas -> groupBy().applyInPandas pipeline and compare against the
+These queries execute real MapReduceClient jobs (core/client.py) through
+core/job.py's run_job — one mapInPandas pass for a one-partition input,
+otherwise a mapInPandas map stage, a hash shuffle + sort on the key and
+a mapInPandas walk over the sorted key runs — and compare against the
 same oracles as their DataFrame-native twins — proving the generic API
 is capability-equivalent to the reference's, not just present.
 """

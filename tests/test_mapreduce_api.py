@@ -5,11 +5,14 @@ and the job lifecycle/progress contract."""
 from __future__ import annotations
 
 import time
+from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduceframework_spark.core import (
     CharCountClient,
+    JobState,
     MapReduceClient,
     ModuloHistogramClient,
     Stage,
@@ -47,9 +50,27 @@ def test_histogram_golden_shape(spark, sf_dir):
     assert all(0 <= r["key"] < 100 for r in rows)
 
 
-def test_async_lifecycle_and_progress(spark, sf_dir):
+# Inputs of each plan shape of core/job.py: a multi-partition frame
+# keeps map stage + shuffle + reduce stage, a one-partition frame runs
+# as one Python pass.
+SHAPES = {
+    "two_stage": lambda df: df.repartition(4),
+    "one_pass": lambda df: df.coalesce(1),
+}
+
+
+def python_passes(df) -> int:
+    return df._jdf.queryExecution().analyzed().toString().count("MapInPandas")
+
+
+@pytest.mark.parametrize(
+    "one_partition", [False, True], ids=["multi_thread_level_8", "one_partition"]
+)
+def test_async_lifecycle_and_progress(spark, sf_dir, one_partition):
     """startMapReduceJob returns immediately; getJobState reports valid
-    {stage, percentage} snapshots; waitForJob then close."""
+    {stage, percentage} snapshots; waitForJob then close. The
+    one-partition input runs as a single Spark stage, which has no
+    reduce stage to report: it reads MAP -> SHUFFLE 100 -> REDUCE 100."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     class SlowCharCount(CharCountClient):
@@ -57,7 +78,14 @@ def test_async_lifecycle_and_progress(spark, sf_dir):
             time.sleep(0.002)  # analog of SampleClient's usleep throttle
             yield from super().map(key, value)
 
-    job = start_map_reduce_job(spark, SlowCharCount(), docs, multi_thread_level=8)
+    if one_partition:
+        job = start_map_reduce_job(spark, SlowCharCount(), docs.coalesce(1))
+        assert python_passes(job.result_df) == 1
+    else:
+        job = start_map_reduce_job(
+            spark, SlowCharCount(), docs, multi_thread_level=8
+        )
+        assert python_passes(job.result_df) == 2
     states = []
     while True:
         st = job.get_state()
@@ -72,6 +100,13 @@ def test_async_lifecycle_and_progress(spark, sf_dir):
     # stages never regress (monotone in the enum ordering)
     seq = [s.stage for s in states]
     assert seq == sorted(seq)
+    assert states[-1] == JobState(Stage.REDUCE, 100.0)
+    if one_partition:
+        assert all(
+            s.percentage == 100.0
+            for s in states
+            if s.stage in (Stage.SHUFFLE, Stage.REDUCE)
+        ), states
     job.close()
 
 
@@ -218,3 +253,114 @@ def test_stage_classification_pins_shuffle_race():
     assert _classify_stages(
         [SI(1, 4, 4, 0), SI(0, 8, 8, 0)]
     ) == JobState(Stage.REDUCE, 100.0)
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_decimal_key_schema(spark, shape):
+    """Client schemas are parsed as DDL, so a parameterized type such as
+    ``decimal(10,2)`` (whose comma once split the field list) works as
+    the shuffle key on both plan shapes."""
+
+    class DecimalBuckets(MapReduceClient):
+        intermediate_schema = "bucket decimal(10,2), v long"
+        output_schema = "bucket decimal(10,2), total long, n long"
+
+        def map(self, key, value):
+            yield Decimal(int(value) % 3) / 4, int(value)
+
+        def reduce(self, key, values):
+            yield key, sum(values), len(values)
+
+    df = SHAPES[shape](
+        spark.createDataFrame([(i, i) for i in range(30)], "k long, v long")
+    )
+    out = run_job(spark, DecimalBuckets(), df)
+    assert python_passes(out) == (1 if shape == "one_pass" else 2)
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [
+        (Decimal("0.00"), sum(range(0, 30, 3)), 10),
+        (Decimal("0.25"), sum(range(1, 30, 3)), 10),
+        (Decimal("0.50"), sum(range(2, 30, 3)), 10),
+    ]
+
+
+def test_null_keys_reach_reduce_alike_on_both_shapes(spark):
+    """Null intermediate keys: a ``long`` key column holding a null
+    reaches ``reduce`` as floats (NaN for the null key), and NaN and None
+    ``double`` keys both become one null key, in ONE reduce call. The
+    one-pass plan round-trips its pairs through Arrow as the two-stage
+    plan's shuffle does, so both shapes give identical rows."""
+
+    def make_client(inter: str, key_of):
+        class NullKeys(MapReduceClient):
+            intermediate_schema = inter
+            output_schema = "k long, n long, total long, null_key_type string"
+
+            def map(self, key, value):
+                yield key_of(int(value)), int(value)
+
+            def reduce(self, key, values):
+                null = key is None or key != key
+                yield (
+                    None if null else int(key),
+                    len(values),
+                    int(sum(values)),
+                    type(key).__name__ if null else None,
+                )
+
+        return NullKeys()
+
+    clients = {
+        "long": make_client(
+            "k long, v long", lambda v: None if v % 4 == 0 else v % 3
+        ),
+        "double": make_client(
+            "k double, v long",
+            lambda v: [float("nan"), None, 0.0, 1.0][v % 4],
+        ),
+    }
+    df = spark.createDataFrame([(i, i) for i in range(40)], "k long, v long")
+    for name, client in clients.items():
+        rows = {
+            shape: sorted(
+                run_job(spark, client, make(df)).collect(),
+                key=lambda r: (r["k"] is not None, r["k"] or 0),
+            )
+            for shape, make in SHAPES.items()
+        }
+        assert rows["one_pass"] == rows["two_stage"], name
+        null_rows = [r for r in rows["one_pass"] if r["k"] is None]
+        assert len(null_rows) == 1, name  # one reduce call for the null key
+        want_null = [v for v in range(40) if v % 4 in ((0,) if name == "long" else (0, 1))]
+        assert (null_rows[0]["n"], null_rows[0]["total"]) == (
+            len(want_null), sum(want_null)
+        ), name
+        assert null_rows[0]["null_key_type"] == "float", name
+        assert sum(r["n"] for r in rows["one_pass"]) == 40, name
+
+
+def test_plan_shape_rule_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """The one-pass choice is read from the input's physical plan on the
+    caller's thread; deciding it starts no Spark job."""
+    from mapreduceframework_spark.core.job import _map_side_is_one_partition
+
+    local = spark.createDataFrame([(i, i) for i in range(40)], "k long, v long")
+    path = str(tmp_path / "one_file.parquet")
+    local.coalesce(1).write.parquet(path)
+    cases = {
+        "local_multi": (local, False),
+        "coalesce_1": (local.coalesce(1), True),
+        "repartition_1": (local.repartition(1), True),
+        "repartition_3": (local.repartition(3), False),
+        "hash_aggregate": (local.groupBy("k").count(), False),
+        "one_parquet_file": (spark.read.parquet(path), True),
+    }
+    sc = spark.sparkContext
+    group = "plan-shape-rule-probe"
+    sc.setJobGroup(group, "must stay empty")
+    try:
+        got = {n: _map_side_is_one_partition(df) for n, (df, _) in cases.items()}
+    finally:
+        sc.setJobGroup("", "")
+    assert got == {n: want for n, (_, want) in cases.items()}
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

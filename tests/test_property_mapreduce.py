@@ -2,12 +2,14 @@
 
 The reference's entire correctness story is two golden client programs
 (SURVEY.md §5); this upgrades it: for RANDOM inputs and a client whose
-map emits 0..2 pairs per record, the Spark pipeline (mapInPandas ->
-groupBy.applyInPandas, core/job.py) and the literal RDD path
-(core/rdd.py) must both equal a naive in-Python mapreduce executed from
-the same client object. That pins the contract itself — emit2 0..n
-times, reduce sees all values of exactly one key, output is an
-unordered bag — not just two fixed examples.
+map emits 0..2 pairs per record, the Spark pipeline (core/job.py, in
+both of its plan shapes: one mapInPandas pass for a one-partition
+input, mapInPandas -> hash shuffle + sort -> key-run mapInPandas
+otherwise) and the literal RDD path (core/rdd.py) must all equal a
+naive in-Python mapreduce executed from the same client object. That
+pins the contract itself — emit2 0..n times, reduce sees all values of
+exactly one key, output is an unordered bag — not just two fixed
+examples.
 """
 
 from __future__ import annotations
@@ -72,6 +74,13 @@ def naive_mapreduce(
     return sorted(out)
 
 
+def python_passes(df) -> int:
+    """Number of mapInPandas nodes in a job's plan: 1 for the one-pass
+    shape, 2 for map stage + reduce stage."""
+    return df._jdf.queryExecution().analyzed().toString().count("MapInPandas")
+
+
+@pytest.mark.parametrize("shape", ["one_partition", "default"])
 @pytest.mark.parametrize("runner", [run_job, run_job_rdd], ids=["df", "rdd"])
 @settings(
     max_examples=5,
@@ -85,13 +94,19 @@ def naive_mapreduce(
     values=st.lists(st.integers(min_value=0, max_value=100_000), max_size=80),
     modulus=st.integers(min_value=1, max_value=7),
 )
-def test_generic_client_matches_naive(spark, runner, values, modulus):
+def test_generic_client_matches_naive(spark, runner, shape, values, modulus):
+    """``one_partition`` is a ``coalesce(1)`` input, which core/job.py
+    runs as one Python pass; ``default`` is the session's multi-partition
+    local frame, which must keep the two-stage plan."""
     client = make_sum_stats_client(modulus)
     pairs = [(i, v) for i, v in enumerate(values)]
     want = naive_mapreduce(client, pairs)
     df = spark.createDataFrame(pairs or [], "key long, value long")
+    if shape == "one_partition":
+        df = df.coalesce(1)
     if runner is run_job:
         got_df = runner(spark, client, df)
+        assert python_passes(got_df) == (1 if shape == "one_partition" else 2)
     else:
         got_df = runner(client, df)
     got = sorted(tuple(r) for r in got_df.collect())

@@ -45,7 +45,12 @@ def glibc_rand(seed: int, n: int) -> list[int]:
 
 
 def parse_golden(name: str) -> dict[int, list[int]]:
-    """{job_number: [count per key, ascending key order]}."""
+    """{job_number: [count per key, ascending key order]}. Fails loudly
+    when the reference's golden files are not present: they are the
+    reference's own outputs, so they are neither skipped nor regenerated
+    from this engine."""
+    if not (GOLDEN_DIR / name).is_file():
+        pytest.fail(f"reference golden files absent at {GOLDEN_DIR}")
     jobs: dict[int, list[int]] = {}
     for line in (GOLDEN_DIR / name).read_text().splitlines():
         if not line.strip():
